@@ -704,13 +704,10 @@ object Bench {
         (if (bestHost <= hostGate) "quiet" else "loaded")
       else "uncalibrated"
     // compact per-query seconds (4 decimals ≈ 0.1 ms resolution — bench noise
-    // floor) so the timings line stays as short as possible for the driver's
-    // bounded stdout capture; the fat plans map goes on its OWN line so a
-    // truncation can never cut the timings mid-line. The driver keeps the
-    // TAIL of its capture window (BENCH_r03/r04/r05 all parsed=null when the
-    // timings line led and the sbt epilogue filled the tail), so stop the
-    // JVM FIRST — Spark's shutdown banner would otherwise land after us —
-    // then print plans, then the timings line dead last.
+    // floor) so the record line stays short for a bounded stdout capture.
+    // The record is the only `{`-prefixed stdout line and the last one: the
+    // plans map goes only to the on-disk artifact (`full` below), and the
+    // JVM is stopped FIRST so Spark's shutdown banner cannot land after it.
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
     val plans = results.map { case (k, _, fp) => s"\"" + k + "\":\"" + fp + "\"" }
@@ -786,7 +783,7 @@ object Bench {
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     spark.stop()
-    println(s"""{"plans":$plans}""")
     println(line)
+    System.out.flush()
   }
 }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * `<outDir>/<name>_<suffix>.txt` — the optimization-round evidence files
   * (plans/r14/<query>_before.txt / _after.txt). The session mirrors
   * graft.Bench exactly (same master/conf/dialect install), so the dumped
-  * plan is the plan the bench actually times, not ExplainQ's 4-core
-  * variant.
+  * plan is the plan the bench actually times, not a variant built on a
+  * differently sized session.
   *
   * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> [name...]
   * (no names = every registered query).
